@@ -39,6 +39,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // view → re-aggregation over the mview's stored partials
     ext.injectPreCBORule(session =>
       new graft.catalog.GraftMviewRewrite(session))
+    // small key-addressed scans read on the driver, no Spark job
+    // (ahead of the stock V2 strategy, which plans everything else)
+    ext.injectPlannerStrategy(_ => graft.catalog.GraftLocalReadStrategy)
     // stored graft views expand in the resolution fixed point (views
     // over views converge across iterations; cycles die at the
     // analyzer's iteration cap)

@@ -2259,10 +2259,12 @@ object GraftProcedures {
           val df = s.table(fqn(catalogName, table)).where(pred)
           // sparkPlan (pre-AQE-wrapping): V2 pushdown has already run
           // in the optimizer, and the adaptive wrapper would hide the
-          // scan node from collect until execution
+          // scan node from collect until execution. A driver-served
+          // key-addressed scan plans the same partitions, unread.
           val parts = df.queryExecution.sparkPlan.collect {
             case b: org.apache.spark.sql.execution.datasources.v2
                 .BatchScanExec => b.inputPartitions
+            case l: GraftLocalScanExec => l.inputPartitions
           }.flatten
           val (files, rows) = parts.map {
             case p: GraftInputPartition => (p.files, p.rows)

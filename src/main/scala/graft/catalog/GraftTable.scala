@@ -461,10 +461,13 @@ object GraftAccel {
   /** transparent materialized-view rewrite of re-aggregable GROUP BYs
     * ([[GraftMviewRewrite]]) */
   val MviewRewrite = "spark.graft.accel.mviewRewrite"
+  /** key-addressed scans small enough to read on the driver, with no
+    * Spark job ([[GraftLocalScanExec]]) */
+  val LocalRead = "spark.graft.accel.localRead"
 
   val All: Seq[String] =
     Seq(StatsSkip, ParquetFilters, AggPushdown, Packing, LimitPushdown,
-      IndexRewrite, MviewRewrite)
+      IndexRewrite, MviewRewrite, LocalRead)
 
   def on(key: String): Boolean = {
     val raw = try org.apache.spark.sql.internal.SQLConf.get
@@ -1403,10 +1406,25 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
       org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone,
       org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis)
 
+  private def bytesOf(regions: Seq[RegionMeta]): Long =
+    regions.map(r => new File(tableDir, r.file).length()).sum
+
+  /** Whether [[GraftLocalScanExec]] may serve this scan on the driver:
+    * not a row-level (group mode) scan, the pushed filters bound at
+    * least one key dimension, and the region files it would read total
+    * at most Spark's one-file open cost (`spark.sql.files.
+    * openCostInBytes`) — the bound keeps driver memory small by
+    * construction. Manifest and file-length work only, no data IO. */
+  def localReadable: Boolean =
+    !groupMode && GraftFilters.intervals(filters.toSeq, dims).nonEmpty &&
+      bytesOf(limitedRegions) <=
+        org.apache.spark.sql.internal.SQLConf.get.filesOpenCostInBytes
+
+  def tableName: String = tableDir.getName
+
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong = OptionalLong.of(
-      selectedRegions.map(r => new File(tableDir, r.file).length())
-        .sum.max(1L))
+      bytesOf(selectedRegions).max(1L))
     override def numRows(): OptionalLong =
       OptionalLong.of(selectedRegions.map(_.rows).sum)
     /** Table-level column stats aggregated from the manifest (key

@@ -1,11 +1,12 @@
 package graft.catalog
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
 import org.apache.spark.sql.sources
@@ -50,7 +51,7 @@ object ParquetColumnarIO {
       filters: Seq[sources.Filter], sessionZone: String = "UTC",
       caseSensitive: Boolean = false) {
 
-    private val conf = new Configuration()
+    private val conf = ParquetRowIO.newConf()
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, ReadSupportClass)
     conf.set(RowRequestedSchemaKey, required.json)
     // read-time semantics captured from the live session conf on the
@@ -67,35 +68,35 @@ object ParquetColumnarIO {
     conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
 
     private val path = new Path(file)
-    private val length = path.getFileSystem(conf).getFileStatus(path).getLen
-    // pushed predicate rebuilt per file against the columns the file
-    // actually has (ALTER-added columns are absent from older regions) —
-    // same soundness contract as the row path (ParquetRowIO.toFileFilter).
-    // The extra footer read only happens when there is a filter to build.
-    if (filters.nonEmpty) {
-      val footer = {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(path, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getFileMetaData.getSchema finally r.close()
-      }
-      ParquetRowIO.toFileFilter(filters, required, footer)
-        .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
-    }
+    private val inputFile = HadoopInputFile.fromPath(path, conf)
     // graft region files are written whole by modern writers: no legacy
     // calendar rebase (CORRECTED = read stored values as-is), no INT96
     private val reader = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
       /* useOffHeap = */ false, Capacity)
     private var initialized = false
+    // The footer is read ONCE, through the stream the record reader
+    // then keeps: the pushed predicate is rebuilt per file against the
+    // columns the file actually has (ALTER-added columns are absent
+    // from older regions) — same soundness contract as the row path
+    // (ParquetRowIO.toFileFilter) — and set on the conf before the
+    // reader filters row groups with it.
+    private val stream = inputFile.newStream()
     try {
+      val footer = ParquetFileReader.readFooter(inputFile,
+        HadoopReadOptions.builder(conf, path).build(), stream)
+      if (filters.nonEmpty)
+        ParquetRowIO.toFileFilter(filters, required,
+          footer.getFileMetaData.getSchema)
+          .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
       reader.initialize(
-        new FileSplit(path, 0, length, Array.empty[String]),
-        new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        new FileSplit(path, 0, inputFile.getLength, Array.empty[String]),
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+        Some(inputFile), Some(stream), Some(footer))
       reader.initBatch(new StructType(), InternalRow.empty)
       reader.enableReturningBatches()
       initialized = true
-    } finally if (!initialized) reader.close()
+    } finally if (!initialized) { reader.close(); stream.close() }
 
     def nextBatch(): Boolean = reader.nextKeyValue()
     def batch(): ColumnarBatch =

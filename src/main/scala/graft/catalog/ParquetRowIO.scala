@@ -31,6 +31,18 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ParquetRowIO {
 
+  /** Loaded once per JVM and never mutated: a fresh `Configuration`
+    * re-parses `core-default.xml` from the classpath on its first
+    * get/set (~10 ms), a copy of a loaded one costs ~0.2 ms. */
+  private lazy val baseConf: Configuration = {
+    val c = new Configuration()
+    c.size() // force the resource load before anyone copies it
+    c
+  }
+
+  /** A private, mutable Hadoop conf for one region reader or writer. */
+  private[catalog] def newConf(): Configuration = new Configuration(baseConf)
+
   // -------------------------------------------------- schema conversion
 
   /** Storable column types: the reference's ten atomic types (SURVEY
@@ -110,7 +122,7 @@ object ParquetRowIO {
 
   final class RowWriter(file: String, schema: StructType,
       pageRowLimit: Int = 0, bloomCols: Seq[String] = Nil) {
-    private val conf = new Configuration()
+    private val conf = newConf()
     private val messageType = toParquetSchema(schema)
     GroupWriteSupport.setSchema(messageType, conf)
     private val factory = new SimpleGroupFactory(messageType)
@@ -214,11 +226,12 @@ object ParquetRowIO {
     * because Spark re-applies every filter above the scan. */
   final class RowReader(file: String, requested: StructType,
       filters: Seq[sources.Filter]) {
-    private val conf = new Configuration()
+    private val conf = newConf()
     private val hPath = new Path(file)
     private val fileSchema: MessageType = {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hPath, conf)
-      val r = ParquetFileReader.open(in)
+      val r = ParquetFileReader.open(in,
+        org.apache.parquet.HadoopReadOptions.builder(conf, hPath).build())
       try r.getFooter.getFileMetaData.getSchema finally r.close()
     }
     private val filter: Option[FilterPredicate] =

@@ -333,10 +333,14 @@ object VectorKernels {
     // visible as 0.5-2.5 s jvmGCTime per pass). Same contract as the
     // HashSet form: count of big-side ELEMENTS (duplicates included)
     // whose value occurs in the small side.
-    var cap = 4
-    while (cap < ns * 2) cap <<= 1
-    val table = new Array[Long](cap)
-    val mask = cap - 1
+    // capacity in Long: ns * 2 overflows Int at ns >= 2^30, which would
+    // leave a full table and a non-terminating probe
+    var cap = 4L
+    while (cap < ns.toLong * 2) cap <<= 1
+    require(cap <= (1 << 30),
+      s"shared_count: $ns elements exceed the probe table's capacity")
+    val table = new Array[Long](cap.toInt)
+    val mask = (cap - 1).toInt
     var hasZero = false
     def slot(v: Long): Int = {
       // 64->32 bit finalizer (splitmix64 tail) so adjacent hashes

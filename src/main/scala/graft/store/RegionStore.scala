@@ -198,23 +198,39 @@ object RegionStore {
 
   // -------------------------------------------------------------- manifest
 
+  /** The manifest is the JSON-lines dir `bulkLoad` writes (one object
+    * per region); parsed on the driver with Jackson — no schema
+    * inference, no Spark job. Listed through the Hadoop FileSystem API
+    * so the region dir may live on any Hadoop filesystem. */
   def readManifest(spark: SparkSession, dir: String): Manifest = {
-    val df = spark.read.json(s"$dir/$ManifestDir")
-    val rows = df.collect()
+    import scala.jdk.CollectionConverters._
+    val mdir = new org.apache.hadoop.fs.Path(s"$dir/$ManifestDir")
+    val fs = mdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val rows = fs.listStatus(mdir).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .flatMap { st =>
+        val in = fs.open(st.getPath)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .filter(_.trim.nonEmpty).map(mapper.readTree).toList
+        finally in.close()
+      }
     require(rows.nonEmpty, s"empty region manifest under $dir")
-    def strs(r: org.apache.spark.sql.Row, field: String): Seq[String] =
-      r.getSeq[String](r.fieldIndex(field)).toSeq
+    def strs(n: com.fasterxml.jackson.databind.JsonNode, field: String)
+        : Seq[String] = n.get(field).elements().asScala.map(_.asText).toSeq
     val keyCols = strs(rows.head, "keyCols").map { s =>
       val i = s.indexOf(':')
       (s.substring(0, i),
         DataType.fromJson(s.substring(i + 1)))
     }
-    val schemaJson = rows.head.getAs[String]("schemaJson")
+    val schemaJson = rows.head.get("schemaJson").asText
     val regions = rows.map { r =>
-      Region(r.getAs[String]("file"), r.getAs[Long]("rows"),
+      Region(r.get("file").asText, r.get("rows").asLong,
         strs(r, "minHex").map(KeyCodec.fromHex),
         strs(r, "maxHex").map(KeyCodec.fromHex))
-    }.toSeq
+    }
     Manifest(keyCols, schemaJson, regions)
   }
 
@@ -239,8 +255,11 @@ object RegionStore {
     * regions, read those Parquet files (Spark still pushes the predicate
     * into row-group/page pruning below us), apply it as residual. */
   def scanWithInfo(spark: SparkSession, dir: String,
+      predicate: Option[Column]): (DataFrame, ScanInfo) =
+    scanManifest(spark, dir, readManifest(spark, dir), predicate)
+
+  private def scanManifest(spark: SparkSession, dir: String, m: Manifest,
       predicate: Option[Column]): (DataFrame, ScanInfo) = {
-    val m = readManifest(spark, dir)
     val dims = m.keyCols.zipWithIndex.map { case ((n, dt), i) =>
       n.toLowerCase -> (i, dt)
     }.toMap
@@ -278,6 +297,6 @@ object RegionStore {
     val pred = m.keyCols.zip(keyValues)
       .map { case ((n, _), v) => col(n) === lit(v) }
       .reduce(_ && _)
-    scan(spark, dir, Some(pred))
+    scanManifest(spark, dir, m, Some(pred))._1
   }
 }

@@ -201,15 +201,16 @@ class CatalogVectorSpec extends AnyFunSuite {
     // probing IS region pruning: the scan of the (cid, vec_id)-keyed
     // table opens at most NProbe of the K one-region cells
     stored.collect()
-    def findScan(p: org.apache.spark.sql.execution.SparkPlan)
-        : Option[BatchScanExec] = p match {
-      case b: BatchScanExec => Some(b)
+    // read partitions of the probed scan, distributed or driver-served
+    def findParts(p: org.apache.spark.sql.execution.SparkPlan)
+        : Option[Int] = p match {
+      case b: BatchScanExec => Some(b.inputRDD.getNumPartitions)
+      case l: GraftLocalScanExec => Some(l.inputPartitions.size)
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        findScan(q.plan)
-      case other => other.children.iterator.flatMap(findScan(_)).nextOption()
+        findParts(q.plan)
+      case other => other.children.iterator.flatMap(findParts(_)).nextOption()
     }
-    val scan = findScan(stored.queryExecution.executedPlan).get
-    val nParts = scan.inputRDD.getNumPartitions
+    val nParts = findParts(stored.queryExecution.executedPlan).get
     assert(nParts <= graft.operators.IvfIndex.NProbe,
       s"expected <= ${graft.operators.IvfIndex.NProbe} probed regions, " +
         s"scan has $nParts partitions")
@@ -232,15 +233,16 @@ class CatalogVectorSpec extends AnyFunSuite {
     // join's broadcast subtree)
     val probed = graft.operators.PqIndex.probedCodes(spark, d)
     probed.collect()
-    def findScan(p: org.apache.spark.sql.execution.SparkPlan)
-        : Option[BatchScanExec] = p match {
-      case b: BatchScanExec => Some(b)
+    // read partitions of the probed scan, distributed or driver-served
+    def findParts(p: org.apache.spark.sql.execution.SparkPlan)
+        : Option[Int] = p match {
+      case b: BatchScanExec => Some(b.inputRDD.getNumPartitions)
+      case l: GraftLocalScanExec => Some(l.inputPartitions.size)
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        findScan(q.plan)
-      case other => other.children.iterator.flatMap(findScan(_)).nextOption()
+        findParts(q.plan)
+      case other => other.children.iterator.flatMap(findParts(_)).nextOption()
     }
-    val scan = findScan(probed.queryExecution.executedPlan).get
-    val nParts = scan.inputRDD.getNumPartitions
+    val nParts = findParts(probed.queryExecution.executedPlan).get
     assert(nParts <= graft.operators.IvfIndex.NProbe,
       s"expected <= ${graft.operators.IvfIndex.NProbe} probed regions, " +
         s"scan has $nParts partitions")

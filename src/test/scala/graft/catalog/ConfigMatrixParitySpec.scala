@@ -106,6 +106,21 @@ class ConfigMatrixParitySpec extends AnyFunSuite {
     assert(scanOf(skipOn).inputPartitions.size == 1,
       "stats skipping should isolate the day=3 region")
     assert(skipOn.count() == 100L)
+    // local read: a key get is served on the driver when on, by the
+    // distributed scan when off — same row either way
+    def localNodes(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      df.queryExecution.executedPlan.collect { case l: GraftLocalScanExec => l }
+    }
+    val getOn = spark.sql("SELECT * FROM graft.accel.t WHERE k = 250")
+    assert(localNodes(getOn).size == 1)
+    allOff {
+      val getOff = spark.sql("SELECT * FROM graft.accel.t WHERE k = 250")
+      assert(localNodes(getOff).isEmpty,
+        "localRead=false must plan the distributed scan")
+      assert(scanOf(getOff).inputPartitions.size == 1)
+      assert(getOff.collect().toSeq == getOn.collect().toSeq)
+    }
     spark.sql("DROP TABLE graft.accel.t")
   }
 }
