@@ -1,17 +1,23 @@
 package graft.catalog
 
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, BindReferences, DynamicPruning, Expression, InterpretedUnsafeProjection, NamedExpression, PlanExpression, Predicate, SortOrder, Unevaluable}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{AliasHelper, And, Attribute, AttributeReference, BasePredicate, BindReferences, DynamicPruning, EqualTo, Expression, InterpretedUnsafeProjection, Literal, NamedExpression, PlanExpression, Predicate, PredicateHelper, SortOrder, Unevaluable, UnsafeRow}
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.util.truncatedString
-import org.apache.spark.sql.connector.read.InputPartition
-import org.apache.spark.sql.execution.{ExplainUtils, LeafExecNode, SQLExecution, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.sql.execution.{ExplainUtils, LeafExecNode, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftshim.DriverCollect
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Plans small key-addressed graft scans as [[GraftLocalScanExec]]:
   * the Project and Filter above a [[GraftScan]] fold into one leaf that
@@ -33,8 +39,13 @@ import org.apache.spark.sql.graftshim.DriverCollect
   *  - the Filter carrying the pushed predicates is absorbed (a
   *    nondeterministic condition stops `PhysicalOperation` short of
   *    the scan), and no absorbed filter or projection holds a subquery
-  *    (DPP included), a nondeterministic or an unevaluable expression. */
-object GraftLocalReadStrategy extends SparkStrategy {
+  *    (DPP included), a nondeterministic or an unevaluable expression.
+  *
+  * An index probe — a `LeftSemi` join whose right side such a scan
+  * serves — plans as [[GraftLocalProbeExec]] under the same switch
+  * (see [[probe]] for its firing conditions). */
+object GraftLocalReadStrategy extends SparkStrategy
+    with PredicateHelper with AliasHelper {
 
   private def interpretable(e: Expression): Boolean =
     e.deterministic && !e.exists {
@@ -44,14 +55,76 @@ object GraftLocalReadStrategy extends SparkStrategy {
       case _ => false
     }
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case PhysicalOperation(project, filters,
-        rel @ DataSourceV2ScanRelation(_, scan: GraftScan, output, None, _))
-        if filters.nonEmpty && GraftAccel.on(GraftAccel.LocalRead) &&
-          (project ++ filters).forall(interpretable) && scan.localReadable =>
-      GraftLocalScanExec(project, filters.reduce(And), output, scan,
-        rel.ordering.getOrElse(Nil)) :: Nil
-    case _ => Nil
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] =
+    if (!GraftAccel.on(GraftAccel.LocalRead)) Nil
+    else plan match {
+      case PhysicalOperation(project, filters,
+          Join(left, right, LeftSemi, Some(cond), _)) =>
+        probe(project, filters, left, right, cond).toList
+      case _ => localScan(plan).toList
+    }
+
+  private def localScan(plan: LogicalPlan): Option[GraftLocalScanExec] =
+    plan match {
+      case PhysicalOperation(project, filters,
+          rel @ DataSourceV2ScanRelation(_, scan: GraftScan, output, None, _))
+          if filters.nonEmpty &&
+            (project ++ filters).forall(interpretable) &&
+            scan.localReadable =>
+        Some(GraftLocalScanExec(project, filters.reduce(And), output, scan,
+          rel.ordering.getOrElse(Nil)))
+      case _ => None
+    }
+
+  /** An index probe ([[GraftIndexRewrite]]'s `LeftSemi` shape) or any
+    * semi join of that shape: the left side a row-scan of a graft table
+    * whose every key column is equated, attribute to attribute, with
+    * the right side; the right side a scan [[localScan]] serves. The
+    * Project and Filter above the join fold through the left side's
+    * aliases into [[GraftLocalProbeExec]]. The left side's DPP filter
+    * is dropped: the node hands the probe's key set to the base scan
+    * itself. Float keys are refused: their join equality is not the
+    * binary equality of the key set. */
+  private def probe(project: Seq[NamedExpression], filters: Seq[Expression],
+      left: LogicalPlan, right: LogicalPlan, cond: Expression)
+      : Option[GraftLocalProbeExec] = left match {
+    case PhysicalOperation(lproj, lfilters,
+        DataSourceV2ScanRelation(_, base: GraftScan, output, None, _))
+        if !base.rowLevel =>
+      val aliases = getAliasMap(lproj)
+      val proj = project.map(replaceAliasButKeepName(_, aliases))
+      val conds = lfilters.filterNot(_.isInstanceOf[DynamicPruning]) ++
+        filters.map(replaceAlias(_, aliases))
+      // (left, right) attribute of each join conjunct
+      val pairs = splitConjunctivePredicates(cond).map {
+        case EqualTo(a: Attribute, b: Attribute) =>
+          if (left.outputSet.contains(a) && right.outputSet.contains(b))
+            Some(a -> b)
+          else if (left.outputSet.contains(b) && right.outputSet.contains(a))
+            Some(b -> a)
+          else None
+        case _ => None
+      }
+      // each left attribute, through the left side's aliases, a column
+      // of the base scan
+      val baseKeys = pairs.flatten.flatMap { case (l, _) =>
+        replaceAlias(l, aliases) match {
+          case a: Attribute => output.find(_.exprId == a.exprId)
+          case _ => None
+        }
+      }
+      val everyKey = pairs.forall(_.isDefined) &&
+        baseKeys.length == pairs.length &&
+        baseKeys.map(_.name.toLowerCase).sorted ==
+          base.keyCols.map(_.toLowerCase).sorted
+      if (!everyKey || baseKeys.exists(a =>
+          a.dataType == FloatType || a.dataType == DoubleType) ||
+        !(proj ++ conds).forall(interpretable)) None
+      else localScan(right).map(child =>
+        GraftLocalProbeExec(proj, conds.reduceOption(And)
+          .getOrElse(Literal.TrueLiteral), output, base, baseKeys,
+          pairs.map(_.get._2), child))
+    case _ => None
   }
 }
 
@@ -115,42 +188,13 @@ case class GraftLocalScanExec(
   /** Reads partitions in order until `limit` rows pass the filter;
     * returns them projected and copied, one array per partition read. */
   private def read(limit: Int): Seq[Array[InternalRow]] = {
-    val bind = (e: Expression) => BindReferences.bindReference(e, scanOutput)
-    val pred = Predicate.createInterpreted(bind(condition))
-    pred.initialize(0)
-    val proj = InterpretedUnsafeProjection.createProjection(
-      projectList.map(bind))
-    proj.initialize(0)
-    val factory = scan.createReaderFactory()
-    val out = Seq.newBuilder[Array[InternalRow]]
-    var n = 0
-    var rowsRead = 0L
-    val parts = inputPartitions.iterator
-    while (n < limit && parts.hasNext) {
-      val part = Array.newBuilder[InternalRow]
-      val reader = factory.createColumnarReader(parts.next())
-      try {
-        while (n < limit && reader.next()) {
-          val rows = reader.get().rowIterator()
-          while (n < limit && rows.hasNext) {
-            val row = rows.next()
-            rowsRead += 1
-            if (pred.eval(row)) {
-              part += proj(row).copy()
-              n += 1
-            }
-          }
-        }
-      } finally reader.close()
-      out += part.result()
-    }
+    val pred = GraftLocalRead.predicate(condition, scanOutput)
+    val proj = GraftLocalRead.projection(projectList, scanOutput)
+    val (out, rowsRead) = GraftLocalRead.readParts(
+      scan.createReaderFactory(), inputPartitions, pred.eval, proj, limit)
     metrics("numOutputRows") += rowsRead
-    scan.reportDriverMetrics().foreach(m => metrics(m.name()).set(m.value()))
-    val executionId =
-      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY)
-    SQLMetrics.postDriverMetricUpdates(sparkContext, executionId,
-      metrics.values.toSeq)
-    out.result()
+    GraftLocalRead.postMetrics(sparkContext, metrics, scan)
+    out
   }
 
   override def executeCollect(): Array[InternalRow] =
@@ -181,4 +225,237 @@ case class GraftLocalScanExec(
       s"regions=${scan.selectedRegions.size} " +
       truncatedString(output, "[", ", ", "]", maxFields) +
       s" filter=$condition"
+}
+
+
+/** A semi join of a graft base table against a driver-served key set —
+  * the index probe [[GraftIndexRewrite]] plans — with the Filter and
+  * Project above it, served on the driver. `child` (the probe side, a
+  * [[GraftLocalScanExec]], so the plan still names the index table)
+  * is collected with no job; its keys reach the base [[GraftScan]]
+  * through the runtime-filter entry `GraftScan.filter` (one `In` per
+  * key column: region re-pruning and parquet `In` predicates, as a DPP
+  * filter would); each base row is then kept iff it passes `condition`
+  * and its key is in the probe's key set (exact membership on the
+  * binary key row). When the re-pruned regions fit the driver-read
+  * bound ([[GraftScan.fitsDriverRead]]) the base is read on the driver
+  * with [[GraftLocalScanExec]]'s loop — no broadcast, DPP, job or
+  * compile; otherwise the same loop runs in exactly one job over the
+  * re-pruned partitions. Nothing is read at planning.
+  *
+  * Metrics: the base scan's region metrics after re-pruning,
+  * `numOutputRows` as the rows its readers produced, and `probeKeys`,
+  * the distinct keys handed to the base scan. */
+case class GraftLocalProbeExec(
+    projectList: Seq[NamedExpression],
+    condition: Expression,
+    scanOutput: Seq[AttributeReference],
+    @transient scan: GraftScan,
+    baseKeys: Seq[AttributeReference],
+    probeKeys: Seq[Attribute],
+    child: SparkPlan) extends UnaryExecNode with DriverCollect {
+
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
+
+  /** The partition count is known only after the runtime re-prune. */
+  override def outputPartitioning: Partitioning = UnknownPartitioning(0)
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext,
+      "number of output rows"),
+    "regionsTotal" -> SQLMetrics.createMetric(sparkContext,
+      "manifest regions (total)"),
+    "regionsScanned" -> SQLMetrics.createMetric(sparkContext,
+      "regions after pruning"),
+    "readPartitions" -> SQLMetrics.createMetric(sparkContext,
+      "packed read tasks"),
+    "probeKeys" -> SQLMetrics.createMetric(sparkContext,
+      "probe keys handed to the base scan"))
+
+  /** The base read, planned at execution: the re-pruned partitions,
+    * their reader factory, the probe's key set, and whether the
+    * partitions fit the driver-read bound. */
+  private case class BaseRead(parts: Seq[InputPartition],
+      factory: PartitionReaderFactory, keys: java.util.HashSet[UnsafeRow],
+      local: Boolean)
+
+  /** Collects the probe keys and hands them to the base scan. */
+  private def planBaseRead(): BaseRead = {
+    val keyOf = GraftLocalRead.projection(probeKeys, child.output)
+    val keys = new java.util.HashSet[UnsafeRow]()
+    child.executeCollect().foreach { row =>
+      val k = keyOf(row).asInstanceOf[UnsafeRow]
+      if (!k.anyNull) keys.add(k.copy())
+    }
+    val runtime: Array[sources.Filter] = baseKeys.indices.map { i =>
+      val dt = baseKeys(i).dataType
+      val values = mutable.LinkedHashSet.empty[Any]
+      keys.forEach(k => values += CatalystTypeConverters
+        .convertToScala(k.get(i, dt), dt))
+      sources.In(baseKeys(i).name, values.toArray): sources.Filter
+    }.toArray
+    scan.filter(runtime)
+    metrics("probeKeys").set(keys.size.toLong)
+    BaseRead(scan.planInputPartitions().toSeq, scan.createReaderFactory(),
+      keys, scan.fitsDriverRead)
+  }
+
+  private def readLocal(b: BaseRead, limit: Int): Seq[Array[InternalRow]] = {
+    val (keep, proj) = GraftLocalProbeExec.rowFns(condition, baseKeys,
+      projectList, scanOutput, b.keys)
+    val (out, rowsRead) =
+      GraftLocalRead.readParts(b.factory, b.parts, keep, proj, limit)
+    metrics("numOutputRows") += rowsRead
+    GraftLocalRead.postMetrics(sparkContext, metrics, scan)
+    out
+  }
+
+  /** The over-bound read: the same loop, one task per re-pruned
+    * partition (with its locality), in the one job the caller runs. */
+  private def readDistributed(b: BaseRead): RDD[InternalRow] = {
+    GraftLocalRead.postMetrics(sparkContext, metrics, scan)
+    val BaseRead(_, factory, keys, _) = b
+    val (cond, keyExprs, projExprs, input) =
+      (condition, baseKeys, projectList, scanOutput)
+    val rowsRead = metrics("numOutputRows")
+    sparkContext.makeRDD(b.parts.map(p => p -> p.preferredLocations().toSeq))
+      .mapPartitions { parts =>
+        val (keep, proj) = GraftLocalProbeExec.rowFns(cond, keyExprs,
+          projExprs, input, keys)
+        val (out, n) = GraftLocalRead.readParts(factory, parts.toSeq, keep,
+          proj, Int.MaxValue)
+        rowsRead += n
+        out.iterator.flatMap(_.iterator)
+      }
+  }
+
+  private def collectUpTo(limit: Int): Array[InternalRow] = {
+    val b = planBaseRead()
+    if (b.local) readLocal(b, limit).flatten.toArray
+    else readDistributed(b).collect().take(limit)
+  }
+
+  override def executeCollect(): Array[InternalRow] =
+    collectUpTo(Int.MaxValue)
+  override def executeTake(limit: Int): Array[InternalRow] =
+    collectUpTo(limit)
+  override def executeTail(limit: Int): Array[InternalRow] =
+    executeCollect().takeRight(limit)
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val b = planBaseRead()
+    if (!b.local) readDistributed(b)
+    else {
+      val parts = readLocal(b, Int.MaxValue)
+      sparkContext.parallelize(parts, parts.length max 1).flatMap(_.iterator)
+    }
+  }
+
+  private def keyString: String =
+    baseKeys.zip(probeKeys).map { case (b, p) => s"$b = $p" }
+      .mkString("[", ", ", "]")
+
+  override def verboseStringWithOperatorId(): String =
+    s"""
+       |$formattedNodeName
+       |${ExplainUtils.generateFieldString("Output", output)}
+       |Scan: ${scan.tableName}
+       |Keys: $keyString
+       |Condition : $condition
+       |""".stripMargin
+
+  override def simpleString(maxFields: Int): String =
+    s"GraftLocalProbe ${scan.tableName} " +
+      truncatedString(output, "[", ", ", "]", maxFields) +
+      s" keys=$keyString filter=$condition"
+
+  override protected def withNewChildInternal(newChild: SparkPlan)
+      : GraftLocalProbeExec = copy(child = newChild)
+}
+
+object GraftLocalProbeExec {
+  /** The per-row test (`condition` and key-set membership) and the
+    * projection over the base scan's rows, built where they run. */
+  def rowFns(condition: Expression, keys: Seq[Expression],
+      project: Seq[Expression], input: Seq[Attribute],
+      keySet: java.util.HashSet[UnsafeRow])
+      : (InternalRow => Boolean, InternalRow => InternalRow) = {
+    val pred = GraftLocalRead.predicate(condition, input)
+    val keyOf = GraftLocalRead.projection(keys, input)
+    val proj = GraftLocalRead.projection(project, input)
+    (row => pred.eval(row) && keySet.contains(keyOf(row)), proj)
+  }
+}
+
+/** The driver-side read loop shared by [[GraftLocalScanExec]],
+  * [[GraftLocalProbeExec]] (whose over-bound path runs the same loop
+  * inside its tasks) and `RegionStore.get`: interpreted filter and
+  * projection, nothing compiled. */
+private[graft] object GraftLocalRead {
+
+  def predicate(condition: Expression, input: Seq[Attribute])
+      : BasePredicate = {
+    val p = Predicate.createInterpreted(
+      BindReferences.bindReference(condition, input))
+    p.initialize(0)
+    p
+  }
+
+  def projection(exprs: Seq[Expression], input: Seq[Attribute])
+      : InternalRow => UnsafeRow = {
+    val p = InterpretedUnsafeProjection.createProjection(
+      exprs.map(BindReferences.bindReference(_, input)))
+    p.initialize(0)
+    row => p(row)
+  }
+
+  /** Reads partitions in order until `limit` rows are kept: one array
+    * per partition read, and the rows the readers produced. */
+  def readParts(factory: PartitionReaderFactory, parts: Seq[InputPartition],
+      keep: InternalRow => Boolean, proj: InternalRow => InternalRow,
+      limit: Int): (Seq[Array[InternalRow]], Long) = {
+    val out = Seq.newBuilder[Array[InternalRow]]
+    var n = 0
+    var rowsRead = 0L
+    val it = parts.iterator
+    while (n < limit && it.hasNext) {
+      val part = mutable.ArrayBuffer.empty[InternalRow]
+      rowsRead += readPartition(factory, it.next(), keep, proj, limit - n,
+        part)
+      n += part.length
+      out += part.toArray
+    }
+    (out.result(), rowsRead)
+  }
+
+  /** Reads one partition through the scan's columnar reader, appending
+    * the projected copy of each row that passes `keep` to `out` until
+    * `limit` rows are kept. Returns the rows the reader produced. */
+  private def readPartition(factory: PartitionReaderFactory,
+      part: InputPartition, keep: InternalRow => Boolean,
+      proj: InternalRow => InternalRow, limit: Int,
+      out: mutable.ArrayBuffer[InternalRow]): Long = {
+    var rowsRead = 0L
+    val reader = factory.createColumnarReader(part)
+    try {
+      while (out.length < limit && reader.next()) {
+        val rows = reader.get().rowIterator()
+        while (out.length < limit && rows.hasNext) {
+          val row = rows.next()
+          rowsRead += 1
+          if (keep(row)) out += proj(row).copy()
+        }
+      }
+    } finally reader.close()
+    rowsRead
+  }
+
+  /** Sets the scan's region metrics and posts the node's driver-side
+    * metric updates to the running execution. */
+  def postMetrics(sc: SparkContext, metrics: Map[String, SQLMetric],
+      scan: GraftScan): Unit = {
+    scan.reportDriverMetrics().foreach(m => metrics(m.name()).set(m.value()))
+    SQLMetrics.postDriverMetricUpdates(sc,
+      sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+  }
 }

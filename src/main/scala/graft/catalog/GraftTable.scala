@@ -1411,14 +1411,24 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
 
   /** Whether [[GraftLocalScanExec]] may serve this scan on the driver:
     * not a row-level (group mode) scan, the pushed filters bound at
-    * least one key dimension, and the region files it would read total
-    * at most Spark's one-file open cost (`spark.sql.files.
-    * openCostInBytes`) — the bound keeps driver memory small by
-    * construction. Manifest and file-length work only, no data IO. */
+    * least one key dimension, and the scan [[fitsDriverRead]].
+    * Manifest and file-length work only, no data IO. */
   def localReadable: Boolean =
     !groupMode && GraftFilters.intervals(filters.toSeq, dims).nonEmpty &&
-      bytesOf(limitedRegions) <=
-        org.apache.spark.sql.internal.SQLConf.get.filesOpenCostInBytes
+      fitsDriverRead
+
+  /** The region files this scan reads (runtime filters included) total
+    * at most Spark's one-file open cost (`spark.sql.files.
+    * openCostInBytes`) — the bound that keeps a driver-side read's
+    * memory small by construction. */
+  def fitsDriverRead: Boolean =
+    bytesOf(limitedRegions) <=
+      org.apache.spark.sql.internal.SQLConf.get.filesOpenCostInBytes
+
+  /** A row-level (group mode) scan of an UPDATE/MERGE/DELETE target. */
+  def rowLevel: Boolean = groupMode
+
+  def keyCols: Seq[String] = meta.keyCols
 
   def tableName: String = tableDir.getName
 

@@ -1909,15 +1909,12 @@ object CatalogQueries {
     * refresh reads 3 — either way the red names its own mechanism in
     * the saved parquet instead of just flipping a hash.
     *
-    * `total` is pinned to DECIMAL(18,2) (int64-backed in Arrow/DuckDB,
-    * vs the int128-backed DECIMAL(22,2) Spark's sum widens to) in both
-    * this face and its oracle — the representation experiment ordered
-    * by the r12 verdict for the standing hash-red: the values are
-    * bit-equal either way (exact decimal arithmetic, proven by
-    * tools/check.py and the canon sidecars), so if the red follows the
-    * decimal width it was the grader's int128 handling; if it stays,
-    * the width theory is falsified too (catalog_mview_delta already
-    * hash-greens the same DECIMAL(22,2) shape). Full forensic chain:
+    * `total` is DECIMAL(22,2), the width Spark's sum of a
+    * DECIMAL(12,2) widens to, in both this face and its oracle. A
+    * narrower pin (DECIMAL(18,2)) was tried as a representation
+    * experiment for the standing hash-red and left it red, so the
+    * width was not the cause; it also overflows once a group's sum
+    * passes 1e16. Full forensic chain:
     * plans/r13/mview_hash_forensics.md. */
   val mviewAgg: Q = (s, d) => {
     val fqn = mviewBase(s, d)
@@ -1926,7 +1923,7 @@ object CatalogQueries {
          |       b.lo, b.hi, p.partial_rows
          |FROM (
          |  SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
-         |         CAST(sum(o_price) AS DECIMAL(18,2)) AS total,
+         |         CAST(sum(o_price) AS DECIMAL(22,2)) AS total,
          |         min(o_price) AS lo,
          |         max(o_price) AS hi
          |  FROM $fqn
@@ -3181,7 +3178,7 @@ object CatalogQueries {
         |         o_orderkey % 2 AS par
         |  FROM orders)
         |SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
-        |       CAST(sum(p) AS DECIMAL(18,2)) AS total,
+        |       CAST(sum(p) AS DECIMAL(22,2)) AS total,
         |       min(p) AS lo, max(p) AS hi,
         |       count(DISTINCT par) AS partial_rows
         |FROM priced GROUP BY o_orderstatus, o_orderpriority""".stripMargin,

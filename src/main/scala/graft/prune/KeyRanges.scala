@@ -19,12 +19,18 @@ import graft.codec.KeyCodec
   */
 object KeyRanges {
 
+  /** The byte order of encoded bounds. The interval-set algebra takes it
+    * as a parameter so a test can count the comparisons it makes;
+    * everything else uses `KeyCodec.compare`. */
+  type ByteOrder = (Array[Byte], Array[Byte]) => Int
+
   /** Interval over encoded bytes; None = unbounded. */
   final case class Iv(lo: Option[Array[Byte]], loInc: Boolean,
       hi: Option[Array[Byte]], hiInc: Boolean) {
-    def isEmpty: Boolean = (lo, hi) match {
+    def isEmpty: Boolean = isEmptyBy(KeyCodec.compare)
+    private[prune] def isEmptyBy(cmp: ByteOrder): Boolean = (lo, hi) match {
       case (Some(a), Some(b)) =>
-        val c = KeyCodec.compare(a, b)
+        val c = cmp(a, b)
         c > 0 || (c == 0 && !(loInc && hiInc))
       case _ => false
     }
@@ -40,12 +46,13 @@ object KeyRanges {
       }
       belowHi && aboveLo
     }
-    def intersect(o: Iv): Iv = {
+    def intersect(o: Iv): Iv = intersectBy(o, KeyCodec.compare)
+    private[prune] def intersectBy(o: Iv, cmp: ByteOrder): Iv = {
       val (nlo, nloInc) = (lo, o.lo) match {
         case (None, _) => (o.lo, o.loInc)
         case (_, None) => (lo, loInc)
         case (Some(a), Some(b)) =>
-          val c = KeyCodec.compare(a, b)
+          val c = cmp(a, b)
           if (c > 0) (lo, loInc)
           else if (c < 0) (o.lo, o.loInc)
           else (lo, loInc && o.loInc)
@@ -54,7 +61,7 @@ object KeyRanges {
         case (None, _) => (o.hi, o.hiInc)
         case (_, None) => (hi, hiInc)
         case (Some(a), Some(b)) =>
-          val c = KeyCodec.compare(a, b)
+          val c = cmp(a, b)
           if (c < 0) (hi, hiInc)
           else if (c > 0) (o.hi, o.hiInc)
           else (hi, hiInc && o.hiInc)
@@ -71,12 +78,12 @@ object KeyRanges {
 
   /** Lower-bound order: unbounded first; equal bytes → inclusive first
     * (an inclusive bound starts earlier). */
-  private def cmpLo(a: Iv, b: Iv): Int = (a.lo, b.lo) match {
+  private def cmpLo(a: Iv, b: Iv, cmp: ByteOrder): Int = (a.lo, b.lo) match {
     case (None, None) => 0
     case (None, _) => -1
     case (_, None) => 1
     case (Some(x), Some(y)) =>
-      val c = KeyCodec.compare(x, y)
+      val c = cmp(x, y)
       if (c != 0) c
       else (a.loInc, b.loInc) match {
         case (true, false) => -1
@@ -87,12 +94,12 @@ object KeyRanges {
 
   /** Upper-bound order: unbounded last; equal bytes → exclusive first
     * (an exclusive bound ends earlier). */
-  private def cmpHi(a: Iv, b: Iv): Int = (a.hi, b.hi) match {
+  private def cmpHi(a: Iv, b: Iv, cmp: ByteOrder): Int = (a.hi, b.hi) match {
     case (None, None) => 0
     case (None, _) => 1
     case (_, None) => -1
     case (Some(x), Some(y)) =>
-      val c = KeyCodec.compare(x, y)
+      val c = cmp(x, y)
       if (c != 0) c
       else (a.hiInc, b.hiInc) match {
         case (true, false) => 1
@@ -105,26 +112,27 @@ object KeyRanges {
     * start at or before `a`'s end — i.e. do they overlap as point
     * sets? Touching at one byte point counts only if both sides
     * include it. */
-  private def startsWithin(a: Iv, b: Iv): Boolean = (b.lo, a.hi) match {
-    case (None, _) | (_, None) => true
-    case (Some(x), Some(y)) =>
-      val c = KeyCodec.compare(x, y)
-      c < 0 || (c == 0 && b.loInc && a.hiInc)
-  }
+  private def startsWithin(a: Iv, b: Iv, cmp: ByteOrder): Boolean =
+    (b.lo, a.hi) match {
+      case (None, _) | (_, None) => true
+      case (Some(x), Some(y)) =>
+        val c = cmp(x, y)
+        c < 0 || (c == 0 && b.loInc && a.hiInc)
+    }
 
   /** Canonical form: sorted by lower bound, pairwise disjoint, no empty
     * intervals. Exact as a point set (overlapping intervals merge into
     * their union hull), which is the semantics every consumer uses. */
-  private def normalize(s: IvSet): IvSet = {
-    val xs = s.filterNot(_.isEmpty)
+  private def normalize(s: IvSet, cmp: ByteOrder): IvSet = {
+    val xs = s.filterNot(_.isEmptyBy(cmp))
     if (xs.lengthCompare(1) <= 0) xs
     else {
-      val sorted = xs.sortWith(cmpLo(_, _) < 0)
+      val sorted = xs.sortWith(cmpLo(_, _, cmp) < 0)
       val out = List.newBuilder[Iv]
       var cur = sorted.head
       sorted.tail.foreach { iv =>
-        if (startsWithin(cur, iv))
-          cur = if (cmpHi(cur, iv) >= 0) cur
+        if (startsWithin(cur, iv, cmp))
+          cur = if (cmpHi(cur, iv, cmp) >= 0) cur
                 else Iv(cur.lo, cur.loInc, iv.hi, iv.hiInc)
         else { out += cur; cur = iv }
       }
@@ -139,19 +147,21 @@ object KeyRanges {
     * the cross product is O(n·m), which a runtime-filter IN-list of
     * tens of thousands of key points turns into minutes of
     * driver-side planning. */
-  private[graft] def intersectSets(a: IvSet, b: IvSet): IvSet =
+  private[graft] def intersectSets(a: IvSet, b: IvSet,
+      cmp: ByteOrder = KeyCodec.compare): IvSet =
     if (a.lengthCompare(16) <= 0 && b.lengthCompare(16) <= 0)
-      (for (x <- a; y <- b) yield x.intersect(y)).filterNot(_.isEmpty)
+      (for (x <- a; y <- b) yield x.intersectBy(y, cmp))
+        .filterNot(_.isEmptyBy(cmp))
     else {
-      val as = normalize(a).toArray
-      val bs = normalize(b).toArray
+      val as = normalize(a, cmp).toArray
+      val bs = normalize(b, cmp).toArray
       val out = List.newBuilder[Iv]
       var i = 0
       var j = 0
       while (i < as.length && j < bs.length) {
-        val c = as(i).intersect(bs(j))
-        if (!c.isEmpty) out += c
-        if (cmpHi(as(i), bs(j)) <= 0) i += 1 else j += 1
+        val c = as(i).intersectBy(bs(j), cmp)
+        if (!c.isEmptyBy(cmp)) out += c
+        if (cmpHi(as(i), bs(j), cmp) <= 0) i += 1 else j += 1
       }
       out.result()
     }

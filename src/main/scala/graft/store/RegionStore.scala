@@ -2,7 +2,10 @@ package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.LocalFrame
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
+import graft.catalog.{GraftAccel, GraftInputPartition, GraftLocalRead, GraftReaderFactory}
 import graft.codec.KeyCodec
 import graft.prune.KeyRanges
 
@@ -291,12 +294,70 @@ object RegionStore {
     scanWithInfo(spark, dir, predicate)._1
 
   /** Point-lookup fast path (the reference's multi-Get): equality on the
-    * full key. */
+    * full key. With `spark.graft.accel.localRead` on, a get whose key
+    * values carry the key columns' own types reads the surviving
+    * region(s) on the driver ([[driverGet]]); otherwise it plans the
+    * pruned scan. */
   def get(spark: SparkSession, dir: String, keyValues: Seq[Any]): DataFrame = {
     val m = readManifest(spark, dir)
-    val pred = m.keyCols.zip(keyValues)
-      .map { case ((n, _), v) => col(n) === lit(v) }
-      .reduce(_ && _)
-    scanManifest(spark, dir, m, Some(pred))._1
+    driverGet(spark, dir, m, keyValues).getOrElse {
+      val pred = m.keyCols.zip(keyValues)
+        .map { case ((n, _), v) => col(n) === lit(v) }
+        .reduce(_ && _)
+      scanManifest(spark, dir, m, Some(pred))._1
+    }
+  }
+
+  /** A get served on the driver: the full-key point is encoded directly
+    * (no analyzer pass over the predicate), pruned against the region
+    * bounds — one region survives in the disjoint range layout
+    * `bulkLoad` writes — and, when the surviving files fit Spark's
+    * one-file open cost (`spark.sql.files.openCostInBytes`, the bound
+    * [[graft.catalog.GraftLocalScanExec]] uses), read with the catalog
+    * region reader and filtered by exact key equality. The rows come
+    * back as a `LocalRelation`-backed DataFrame, so collecting it runs
+    * no job. None when the switch is off, a value is null or not of
+    * its key column's type (equality would need a cast), a key is a
+    * float (its SQL equality is not value equality), or the bound is
+    * exceeded. */
+  private def driverGet(spark: SparkSession, dir: String, m: Manifest,
+      keyValues: Seq[Any]): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    if (!GraftAccel.on(GraftAccel.LocalRead) ||
+      keyValues.length != m.keyCols.length) return None
+    val point = m.keyCols.zip(keyValues).map { case ((_, dt), v) =>
+      scala.util.Try(Literal(v)).toOption
+        .filter(l => l.value != null && l.dataType == dt &&
+          dt != FloatType && dt != DoubleType)
+        .map(_.value)
+    }
+    if (point.exists(_.isEmpty)) return None
+    val values = point.map(_.get)
+    val constraints = m.keyCols.indices.map { d =>
+      val b = KeyCodec.encode(m.keyCols(d)._2, values(d))
+      d -> List(KeyRanges.Iv(Some(b), loInc = true, Some(b), hiInc = true))
+    }.toMap
+    val survivors = m.regions.filter(r =>
+      KeyRanges.survives(constraints, r.mins, r.maxs))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val paths = survivors.map(r => s"$dir/${r.file}")
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    if (paths.map(p => fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(p)).getLen).sum >
+      conf.filesOpenCostInBytes) return None
+    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val keyOrdinals = m.keyCols.map { case (n, _) => schema.fieldIndex(n) }
+    val factory = GraftReaderFactory(schema.json,
+      m.keyCols.zip(keyValues).map { case ((n, _), v) =>
+        sources.EqualTo(n, v): sources.Filter }.toArray,
+      conf.sessionLocalTimeZone, conf.caseSensitiveAnalysis)
+    val (rows, _) = GraftLocalRead.readParts(factory,
+      survivors.zip(paths).map { case (r, p) =>
+        GraftInputPartition(Array(p), r.rows) },
+      row => keyOrdinals.indices.forall(d =>
+        row.get(keyOrdinals(d), m.keyCols(d)._2) == values(d)),
+      identity, Int.MaxValue)
+    Some(LocalFrame(spark, schema, rows.flatten))
   }
 }

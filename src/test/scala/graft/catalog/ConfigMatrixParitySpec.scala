@@ -121,6 +121,27 @@ class ConfigMatrixParitySpec extends AnyFunSuite {
       assert(scanOf(getOff).inputPartitions.size == 1)
       assert(getOff.collect().toSeq == getOn.collect().toSeq)
     }
+    // local read of an index probe: the probe node serves the semi join
+    // when on, the broadcast join over a DPP-filtered scan when off
+    spark.sql("CALL graft.sys.index(table => 'accel.t', column => 'day')")
+      .collect()
+    def probeNodes(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      df.queryExecution.executedPlan.collect { case p: GraftLocalProbeExec => p }
+    }
+    val probe = "SELECT k, v FROM graft.accel.t WHERE day = 2"
+    val probeOn = spark.sql(probe)
+    assert(probeNodes(probeOn).size == 1)
+    spark.conf.set(GraftAccel.LocalRead, "false")
+    try {
+      val probeOff = spark.sql(probe)
+      assert(probeNodes(probeOff).isEmpty,
+        "localRead=false must plan the distributed probe join")
+      assert(probeOff.collect().map(_.toString).sorted.toSeq ==
+        probeOn.collect().map(_.toString).sorted.toSeq)
+      assert(probeOff.collect().length == 100)
+    } finally spark.conf.unset(GraftAccel.LocalRead)
+    spark.sql("DROP TABLE graft.accel.t_idx_day")
     spark.sql("DROP TABLE graft.accel.t")
   }
 }

@@ -12,11 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Driver-served key-addressed reads ([[GraftLocalScanExec]]): gets,
-  * key ranges and composite-prefix scans submit no Spark job and
-  * compile no code, answer exactly as the distributed scan does, keep
-  * the region metrics, and never engage outside their firing
-  * conditions. Every gate is an exact count or an answer comparison. */
+/** Driver-served key-addressed reads ([[GraftLocalScanExec]],
+  * [[GraftLocalProbeExec]]): gets, key ranges, composite-prefix scans
+  * and index probes submit no Spark job and compile no code, answer
+  * exactly as the distributed plan does, keep the region metrics, and
+  * never engage outside their firing conditions. Every gate is an
+  * exact count or an answer comparison. */
 class LocalReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -50,6 +51,11 @@ class LocalReadSpec extends AnyFunSuite {
       : Seq[GraftLocalScanExec] =
     nodes(df.queryExecution.executedPlan, subqueries).collect {
       case l: GraftLocalScanExec => l
+    }
+
+  private def probes(df: DataFrame): Seq[GraftLocalProbeExec] =
+    nodes(df.queryExecution.executedPlan).collect {
+      case p: GraftLocalProbeExec => p
     }
 
   private def withConf[T](kv: (String, String)*)(body: => T): T = {
@@ -262,5 +268,172 @@ class LocalReadSpec extends AnyFunSuite {
         "numOutputRows counts the rows the region reader produced")
       assert(l.toString.contains("GraftLocalScan t regions=1"), l.toString)
     }
+  }
+
+  // ------------------------------------------------------ index probes
+
+  /** `ix`: 8 key regions; `grp` clusters with the key (k / 500), `tag`
+    * scatters (k % 40); `pad` makes base regions much larger than the
+    * index regions. Fresh indexes on `grp` and on `c.w`. */
+  private lazy val probeSetup: Unit = {
+    setup
+    spark.sql("DROP TABLE IF EXISTS graft.lr.ix")
+    spark.sql("DROP TABLE IF EXISTS graft.lr.ix_idx_grp")
+    spark.sql("DROP TABLE IF EXISTS graft.lr.c_idx_w")
+    createIx("graft.lr.ix")
+    spark.sql("CALL graft.sys.index(table => 'lr.ix', column => 'grp')")
+      .collect()
+    spark.sql("CALL graft.sys.index(table => 'lr.c', column => 'w')")
+      .collect()
+  }
+
+  private def createIx(name: String): Unit = {
+    spark.sql(s"CREATE TABLE $name (k BIGINT, grp BIGINT, tag STRING, " +
+      "v DOUBLE, pad STRING) TBLPROPERTIES('keyCols'='k', 'numRegions'='8')")
+    spark.sql(s"INSERT INTO $name SELECT id, id DIV 500, " +
+      "concat('t', id % 40), id * 0.5, concat(sha2(CAST(id AS STRING), 512), " +
+      "sha2(CAST(-id AS STRING), 512)) FROM range(4000)")
+  }
+
+  /** Same answer with the switch on and off; the probe node serves the
+    * query iff `fires`, and never with the switch off. */
+  private def probeParity(q: String, fires: Boolean): Seq[String] = {
+    def run(localRead: Boolean): (Seq[String], Int) =
+      withConf(GraftAccel.LocalRead -> localRead.toString) {
+        val df = spark.sql(q)
+        (df.collect().map(_.toString).sorted.toSeq, probes(df).size)
+      }
+    val (on, nOn) = run(localRead = true)
+    val (off, nOff) = run(localRead = false)
+    assert((nOn > 0) == fires, s"probe node count $nOn for: $q")
+    assert(nOff == 0, s"localRead=false must plan the join: $q")
+    assert(on == off, s"answers diverge for: $q")
+    on
+  }
+
+  test("index point and range probes submit no job and compile nothing") {
+    probeSetup
+    val shapes = Seq(
+      ("SELECT k, v FROM graft.lr.ix WHERE grp = %d", Seq(1, 5), 500),
+      ("SELECT k, tag FROM graft.lr.ix WHERE grp BETWEEN %d AND %<d + 1",
+        Seq(0, 3), 1000))
+    shapes.foreach { case (shape, Seq(warm, key), want) =>
+      measure(shape.format(warm))
+      val q = shape.format(key)
+      val (jobs, compiles, rows) = measure(q)
+      assert(rows.size == want, q)
+      assert(jobs == 0, s"$jobs jobs for: $q")
+      assert(compiles == 0, s"$compiles codegen compiles for: $q")
+      val df = spark.sql(q)
+      df.collect()
+      val p = probes(df)
+      assert(p.size == 1, q)
+      // the plan still names the index; the base is re-pruned to the
+      // regions holding the probed keys (k / 500 = key: one or two)
+      assert(df.queryExecution.executedPlan.toString.contains("ix_idx_grp"), q)
+      assert(p.head.metrics("probeKeys").value == want, q)
+      assert(p.head.metrics("regionsScanned").value <= 3, q)
+      assert(p.head.metrics("regionsTotal").value == 8, q)
+    }
+  }
+
+  test("index probes answer as the distributed join: empty probe, " +
+      "composite base key, stale index, time travel, IN subquery") {
+    probeSetup
+    assert(probeParity("SELECT k, v FROM graft.lr.ix WHERE grp = 999",
+      fires = true).isEmpty)
+    assert(probeParity("SELECT * FROM graft.lr.ix WHERE grp = 2 AND " +
+      "tag = 't7'", fires = true).size == 13)
+    // under an aggregate: the node hands its rows to an RDD parent
+    assert(probeParity("SELECT tag, count(*), sum(v) FROM graft.lr.ix " +
+      "WHERE grp = 2 GROUP BY tag", fires = true).size == 40)
+    // composite base key (a, b): both key columns join the probe
+    assert(probeParity("SELECT a, b, w FROM graft.lr.c WHERE w = '2001'",
+      fires = true) == Seq("[500,1,2001]"))
+    // a semi join the user wrote, every base key equated to a small
+    // driver-served graft read
+    assert(probeParity("SELECT k, grp FROM graft.lr.ix WHERE k IN " +
+      "(SELECT a FROM graft.lr.c WHERE a BETWEEN 10 AND 12)",
+      fires = true).size == 3)
+    // not every base key equated: the join stays distributed
+    probeParity("SELECT a, b, w FROM graft.lr.c WHERE a IN " +
+      "(SELECT k FROM graft.lr.t WHERE k BETWEEN 10 AND 12)", fires = false)
+    // time travel and a stale index: no rewrite, no probe
+    val dir = spark.sessionState.catalogManager.catalog("graft")
+      .asInstanceOf[GraftCatalog]
+      .loadTable(org.apache.spark.sql.connector.catalog.Identifier
+        .of(Array("lr"), "ix")).asInstanceOf[GraftTable].tableDir
+    val v = TableMeta.currentVersion(dir)
+    spark.sql("INSERT INTO graft.lr.ix SELECT id, 3, 'tx', 0.0, 'p' " +
+      "FROM range(9000, 9005)")
+    assert(probeParity(s"SELECT k, v FROM graft.lr.ix VERSION AS OF $v " +
+      "WHERE grp = 3", fires = false).size == 500)
+    assert(probeParity("SELECT k, v FROM graft.lr.ix WHERE grp = 3",
+      fires = false).size == 505)
+    spark.sql("CALL graft.sys.index(table => 'lr.ix', column => 'grp')")
+      .collect()
+    assert(probeParity("SELECT k, v FROM graft.lr.ix WHERE grp = 3",
+      fires = true).size == 505)
+  }
+
+  test("MERGE and UPDATE on an indexed column leave the same table with " +
+      "the switch on and off") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.lr")
+    val stmts = Seq(
+      "UPDATE %s SET v = -1.0 WHERE grp = 3",
+      "MERGE INTO %s t USING (SELECT id AS k, 7.0 AS v FROM range(1490, " +
+        "1510)) s ON t.k = s.k AND t.grp = 2 WHEN MATCHED THEN UPDATE " +
+        "SET t.v = s.v")
+    stmts.foreach { stmt =>
+      def after(localRead: Boolean): Seq[String] =
+        withConf(GraftAccel.LocalRead -> localRead.toString) {
+          spark.sql("DROP TABLE IF EXISTS graft.lr.rwix")
+          spark.sql("DROP TABLE IF EXISTS graft.lr.rwix_idx_grp")
+          createIx("graft.lr.rwix")
+          spark.sql("CALL graft.sys.index(table => 'lr.rwix', " +
+            "column => 'grp')").collect()
+          spark.sql(stmt.format("graft.lr.rwix"))
+          spark.sql("SELECT k, grp, v FROM graft.lr.rwix").collect()
+            .map(_.toString).sorted.toSeq
+        }
+      val on = after(localRead = true)
+      assert(on == after(localRead = false), stmt)
+      assert(on.size == 4000)
+    }
+    spark.sql("DROP TABLE graft.lr.rwix")
+    spark.sql("DROP TABLE IF EXISTS graft.lr.rwix_idx_grp")
+  }
+
+  test("a probe whose re-pruned base exceeds the byte bound runs " +
+      "exactly one job, same answer") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.lr")
+    spark.sql("DROP TABLE IF EXISTS graft.lr.big")
+    spark.sql("DROP TABLE IF EXISTS graft.lr.big_idx_grp")
+    createIx("graft.lr.big")
+    spark.sql("CALL graft.sys.index(table => 'lr.big', column => 'grp')")
+      .collect()
+    def bytes(table: String): Seq[Long] = {
+      val t = spark.sessionState.catalogManager.catalog("graft")
+        .asInstanceOf[GraftCatalog]
+        .loadTable(org.apache.spark.sql.connector.catalog.Identifier
+          .of(Array("lr"), table)).asInstanceOf[GraftTable]
+      TableMeta.loadRegions(t.tableDir)
+        .map(r => new java.io.File(t.tableDir, r.file).length())
+    }
+    // a bound the whole index fits under and no base region does
+    val bound = bytes("big_idx_grp").sum
+    assert(bound < bytes("big").min, "fixture: base regions must be larger")
+    val q = "SELECT k, tag FROM graft.lr.big WHERE grp = 4"
+    val local = measure(q)
+    withConf("spark.sql.files.openCostInBytes" -> bound.toString) {
+      val df = spark.sql(q)
+      assert(probes(df).size == 1, q)
+      val (jobs, _, rows) = measure(q)
+      assert(jobs == 1, s"$jobs jobs over the bound")
+      assert(rows == local._3)
+      assert(rows.size == 500)
+    }
+    spark.sql("DROP TABLE graft.lr.big")
+    spark.sql("DROP TABLE graft.lr.big_idx_grp")
   }
 }

@@ -40,20 +40,27 @@ class SecondaryIndexSpec extends AnyFunSuite {
         |FROM range(8000)""".stripMargin)
   }
 
-  private def baseScan(df: org.apache.spark.sql.DataFrame)
-      : BatchScanExec = {
+  /** The base side of an index lookup: (whether the probe's key set
+    * reached the base scan as a runtime filter, the base read
+    * partitions), read off the distributed plan (a DPP-filtered
+    * BatchScanExec) or off the driver-served probe node, which hands
+    * the key set to its base scan itself. */
+  private def baseSide(df: org.apache.spark.sql.DataFrame): (Boolean, Int) = {
     def all(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[BatchScanExec] = p match {
-      case b: BatchScanExec => Seq(b)
+        : Seq[(Boolean, Int)] = p match {
+      // the base side is the one that outputs the payload column
+      case b: BatchScanExec if b.output.exists(_.name == "v") =>
+        Seq((b.runtimeFilters.nonEmpty, b.inputRDD.getNumPartitions))
+      case l: GraftLocalProbeExec =>
+        Seq((l.metrics("probeKeys").value > 0,
+          l.metrics("readPartitions").value.toInt))
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         all(a.executedPlan)
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
         all(q.plan)
       case other => other.children.flatMap(all)
     }
-    // the base side is the one that outputs the payload column
-    all(df.queryExecution.executedPlan)
-      .find(_.output.exists(_.name == "v"))
+    all(df.queryExecution.executedPlan).headOption
       .getOrElse(fail("no base-table scan in plan"))
   }
 
@@ -102,12 +109,11 @@ class SecondaryIndexSpec extends AnyFunSuite {
     // collect() so the inspected plan is the executed one (runtime
     // filters only exist post-execution)
     assert(q.collect().length == 1000)
-    val scan = baseScan(q)
-    assert(scan.runtimeFilters.nonEmpty,
+    val (runtimeFiltered, parts) = baseSide(q)
+    assert(runtimeFiltered,
       "expected the index probe to reach the base scan as a runtime filter")
     // keys 3000..3999 sit in 1 of 8 key-range regions (+ a possible
     // boundary straddle); without the runtime filter all 8 would scan
-    val parts = scan.inputRDD.getNumPartitions
     assert(parts <= 2, s"expected runtime key pruning to <=2 regions, got $parts")
   }
 
@@ -222,11 +228,10 @@ class SecondaryIndexSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(0)).max == 3999L)
     // the executed plan must carry the index-probe join: two scans,
     // and the base side runtime-filtered by the probe's key set
-    val scan = baseScan(q)
-    assert(scan.runtimeFilters.nonEmpty,
+    val (runtimeFiltered, parts) = baseSide(q)
+    assert(runtimeFiltered,
       "expected the transparent index probe to runtime-filter the base")
-    assert(scan.inputRDD.getNumPartitions <= 2,
-      s"expected region pruning, got ${scan.inputRDD.getNumPartitions}")
+    assert(parts <= 2, s"expected region pruning, got $parts")
   }
 
   test("transparent rewrite stays off for stale indexes, key columns, " +
@@ -280,11 +285,10 @@ class SecondaryIndexSpec extends AnyFunSuite {
     assert(rows.length == 2000)
     assert(rows.map(_.getLong(0)).min == 3000L)
     assert(rows.map(_.getLong(0)).max == 4999L)
-    val scan = baseScan(q)
-    assert(scan.runtimeFilters.nonEmpty,
+    val (runtimeFiltered, parts) = baseSide(q)
+    assert(runtimeFiltered,
       "expected the range probe to runtime-filter the base")
-    assert(scan.inputRDD.getNumPartitions <= 3,
-      s"expected region pruning, got ${scan.inputRDD.getNumPartitions}")
+    assert(parts <= 3, s"expected region pruning, got $parts")
   }
 
   test("covering index answers index-only: no base scan, one point " +
@@ -302,6 +306,8 @@ class SecondaryIndexSpec extends AnyFunSuite {
         : Seq[Int] = p match {
       case b: BatchScanExec => Seq(b.inputRDD.getNumPartitions)
       case l: GraftLocalScanExec => Seq(l.inputPartitions.size)
+      case p: GraftLocalProbeExec =>
+        p.metrics("readPartitions").value.toInt +: scans(p.child)
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         scans(a.executedPlan)
       case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>

@@ -122,4 +122,67 @@ class RegionStoreSpec extends AnyFunSuite {
         Seq("embedding"), "/tmp/graft_test_bad", 2)
     }
   }
+
+  /** Jobs submitted while `body` runs (the listener bus is drained
+    * before and after; `listenerBus` is private[spark], reached by
+    * reflection). */
+  private def jobsOf[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(l)
+    try { val r = body; drain(); (jobs.get, r) }
+    finally sc.removeSparkListener(l)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("get runs no Spark job") {
+    built1
+    RegionStore.get(spark, dir1, Seq(7L)).collect() // warm the row decoder
+    val (jobs, got) = jobsOf(RegionStore.get(spark, dir1, Seq(100L)).collect())
+    assert(jobs == 0, s"get ran $jobs jobs")
+    assert(got.length == 1 && got(0).getAs[Long]("o_orderkey") == 100L)
+  }
+
+  test("get equals scan(key === v) on single and composite keys") {
+    built1
+    built2
+    val keys = orders.select("o_custkey", "o_orderkey").orderBy("o_orderkey")
+      .limit(5).collect().map(r => (r.getLong(0), r.getLong(1)))
+    (keys.map(_._2).toSeq :+ 2L :+ -5L).foreach { k => // 2: no such key
+      assert(rows(RegionStore.get(spark, dir1, Seq(k))) ==
+        rows(RegionStore.scan(spark, dir1, Some(col("o_orderkey") === k))), k)
+    }
+    keys.foreach { case (c, o) =>
+      val got = rows(RegionStore.get(spark, dir2, Seq(c, o)))
+      assert(got.size == 1)
+      assert(got == rows(RegionStore.scan(spark, dir2,
+        Some(col("o_custkey") === c && col("o_orderkey") === o))), (c, o))
+    }
+    assert(RegionStore.get(spark, dir2, Seq(keys(0)._1, keys(1)._2))
+      .collect().isEmpty)
+  }
+
+  test("get after a re-bulkLoad of the same dir returns the new row") {
+    val dir = "/tmp/graft_test_store_reload"
+    import spark.implicits._
+    RegionStore.bulkLoad(Seq((1L, "old"), (2L, "x")).toDF("k", "s"),
+      Seq("k"), dir, 2)
+    assert(rows(RegionStore.get(spark, dir, Seq(1L))) == Seq("[1,old]"))
+    RegionStore.bulkLoad(Seq((1L, "new"), (3L, "y")).toDF("k", "s"),
+      Seq("k"), dir, 2)
+    assert(rows(RegionStore.get(spark, dir, Seq(1L))) == Seq("[1,new]"))
+    assert(RegionStore.get(spark, dir, Seq(2L)).collect().isEmpty)
+  }
 }
